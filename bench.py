@@ -180,8 +180,7 @@ def run_crawl(spark, n: int = CRAWL_N, n_hosts: int = CRAWL_HOSTS,
                 f.write(G.seeds_text(seed, n, n_hosts, n_s))
             return read_seeds(spark, sd)
 
-        cfg = CrawlConfig(n_salts=4, use_bloom=False,
-                          default_budget=CRAWL_BUDGET)
+        cfg = CrawlConfig(n_salts=4, default_budget=CRAWL_BUDGET)
 
         # Warm-up: one small structurally-identical crawl so whole-stage
         # codegen + plan caches are hot (JVM warmup, not data reuse) —
@@ -239,10 +238,9 @@ def _interleaved_probe(mk_engine, n_small: int, n_big: int,
                        repeats: int = 3) -> dict:
     """Shared O(delta) probe protocol (round-4 VERDICT item 1): build
     BOTH engines (small and big synthetic state) up front, warm each
-    through rounds 0-1 (round 0 pays the one-off full-bloom / first-
-    incremental build; round 1 settles JIT + AQE statistics — measured
-    on this box, the first post-bloom round still runs ~1.6x its
-    steady-state cost), then alternate timed steady-state rounds —
+    through rounds 0-1 (round 0 pays first-touch codegen and the first
+    scan of the synthetic state; round 1 settles JIT + AQE statistics),
+    then alternate timed steady-state rounds —
     s.r2, b.r2, s.r3, b.r3, ... — so box drift lands on both sides of
     every ratio pair. The reported ratio is the median of per-pair
     ratios; a single-shot ratio on this box is unreadable (±30-60%
@@ -285,9 +283,10 @@ def run_state_probe(spark, repeats: int = 3) -> dict:
     set of S vs 10S entries. With O(delta) state commits (seen event
     log + pending-only frontier) round wall time must stay ~flat —
     the driver's done-criterion is ratio <= 1.5. The synthetic seen
-    entries are injected as bootstrap-time insert events; round 0
-    (which pays the one-off full bloom build) is excluded; steady-state
-    rounds are measured interleaved small/big (median of >=3 pairs)."""
+    entries are injected as bootstrap-time insert events, so every
+    round's exact seen check scans them; rounds 0-1 are warm-up;
+    steady-state rounds are measured interleaved small/big (median of
+    >=3 pairs)."""
     from pyspark.sql import functions as F
     from web_scrapers_python_spark.plans.engine import CrawlConfig, CrawlEngine
     from web_scrapers_python_spark.sources import datagen as G
@@ -309,7 +308,7 @@ def run_state_probe(spark, repeats: int = 3) -> dict:
             f.write(G.seeds_text(seed, n, n_hosts, 64))
         cat = SnapshotCatalog(spark, wh)
         eng = CrawlEngine(spark, pages, policy, cat,
-                          CrawlConfig(use_bloom=True, default_budget=8))
+                          CrawlConfig(default_budget=8))
         eng.bootstrap(read_seeds(spark, sd))
         # age the crawl: n_extra synthetic already-seen URLs
         synth = spark.range(n_extra).select(
@@ -355,9 +354,9 @@ def run_pending_probe(spark, repeats: int = 3) -> dict:
     the shard-scoped frontier commit (only touched buckets rewritten)
     and the partial WindowGroupLimit in scheduling (per-host top-B
     prunes map-side), round wall time must stay ~flat: the target is
-    ratio <= 1.2. Round 0 (first incremental-filter round) is the
-    warm-up; steady-state rounds are measured interleaved small/big
-    (median of >=3 pairs — round-4 VERDICT item 1)."""
+    ratio <= 1.2. Rounds 0-1 are the warm-up; steady-state rounds are
+    measured interleaved small/big (median of >=3 pairs — round-4
+    VERDICT item 1)."""
     from pyspark.sql import functions as F
     from web_scrapers_python_spark.operators import links as L
     from web_scrapers_python_spark.plans.engine import (
@@ -384,8 +383,7 @@ def run_pending_probe(spark, repeats: int = 3) -> dict:
         with open(sd, "w") as f:
             f.write(G.seeds_text(seed, n, n_hosts, 64))
         cat = SnapshotCatalog(spark, wh)
-        cfg = CrawlConfig(use_bloom=True, default_budget=8,
-                          n_buckets=n_buckets)
+        cfg = CrawlConfig(default_budget=8, n_buckets=n_buckets)
         eng = CrawlEngine(spark, pages, policy, cat, cfg)
         eng.bootstrap(read_seeds(spark, sd))
         # inject the synthetic backlog as far-future-FIFO pending

@@ -2,9 +2,9 @@
 simulator (north rule: 'matching the reference's crawl ordering and
 URL-seen set under the same seed list + politeness budget').
 
-Also covers: resume-from-snapshot identity, bloom-vs-exact dedup
-equivalence, salted-vs-plain politeness equivalence, robots blocking,
-and retry semantics for missing pages.
+Also covers: resume-from-snapshot identity, seen-log compaction,
+salted-vs-plain politeness equivalence, robots blocking, and retry
+semantics for missing pages.
 """
 
 from __future__ import annotations
@@ -147,13 +147,6 @@ def test_scheduled_sets_per_round(spark, pages, policy, seeds_df, golden,
         assert fetched_r == want, f"round {r}"
 
 
-def test_bloom_dedup_equivalence(spark, pages, policy, seeds_df, golden,
-                                 tmp_path):
-    cfg = CrawlConfig(use_bloom=True)
-    cat, metrics = _run_engine(spark, pages, policy, seeds_df, tmp_path, cfg)
-    _assert_matches_golden(cat, metrics, golden)
-
-
 def test_salted_politeness_equivalence(spark, pages, policy, seeds_df,
                                        golden, tmp_path):
     cfg = CrawlConfig(n_salts=4)
@@ -174,10 +167,8 @@ def test_unbroadcast_fetch_join_equivalence(spark, pages, policy, seeds_df,
 def test_seen_compaction_equivalence(spark, pages, policy, seeds_df,
                                      golden, tmp_path):
     """Compacting the seen event log every round must not change any
-    observable state (merge is idempotent over disjoint event sets) —
-    and the bloom path must stay consistent across compactions."""
-    cfg = CrawlConfig(use_bloom=True, compact_seen_every=1,
-                      seen_compact_groups=1)
+    observable state (merge is idempotent over disjoint event sets)."""
+    cfg = CrawlConfig(compact_seen_every=1, seen_compact_groups=1)
     cat, metrics = _run_engine(spark, pages, policy, seeds_df, tmp_path, cfg)
     _assert_matches_golden(cat, metrics, golden)
     # post-compaction the log IS the merged view: one row per url_hash
@@ -191,8 +182,7 @@ def test_seen_rotating_compaction_equivalence(spark, pages, policy, seeds_df,
     bucket group's shards — the amortized O(seen/groups) path) must
     leave every observable state identical to the uncompacted run, and
     the most recently compacted group's log must be fully merged."""
-    cfg = CrawlConfig(use_bloom=True, compact_seen_every=1,
-                      seen_compact_groups=4)
+    cfg = CrawlConfig(compact_seen_every=1, seen_compact_groups=4)
     cat, metrics = _run_engine(spark, pages, policy, seeds_df, tmp_path, cfg)
     _assert_matches_golden(cat, metrics, golden)
     groups = 4

@@ -110,6 +110,22 @@ class TestShardCatalog:
         with pytest.raises(ValueError, match="unsharded"):
             cat.overwrite_shards("t", delta, [1], "b")
 
+    def test_orphan_snapshot_dir_is_replaced(self, spark, tmp_path):
+        """A crash after a data dir's rename but before its commit
+        leaves a snap-<n> the log never lists; the next write to that
+        table must replace it, not wedge on the rename."""
+        cat = SnapshotCatalog(spark, str(tmp_path))
+        df = spark.range(10).select(
+            "id", (F.col("id") % 2).cast("int").alias("b"))
+        cat.write_snapshot("t", df, {"round": 0})
+        orphan = tmp_path / "t" / "snap-1"
+        orphan.mkdir()
+        (orphan / "part-0.parquet").write_bytes(b"torn")
+        s1 = cat.write_snapshot("t", df.limit(3), {"round": 1})
+        assert s1 == 1
+        assert cat.read("t").count() == 3
+        assert not (orphan / "part-0.parquet").exists()
+
 
 @pytest.fixture(scope="module")
 def crawl_setup(spark, tmp_path_factory):
@@ -183,8 +199,7 @@ class TestFrontierDeltaCommit:
         footer arithmetic or a snapshot write."""
         pages, policy, seeds = crawl_setup
         cat = SnapshotCatalog(spark, str(tmp_path))
-        eng = CrawlEngine(spark, pages, policy, cat,
-                          CrawlConfig(use_bloom=True))
+        eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig())
         ms = eng.run(read_seeds(spark, seeds), max_rounds=6)
         assert len(ms) >= 2
         for m in ms:

@@ -138,8 +138,7 @@ def run_level(cpus: int, pages_path: str, workdir: str, cfg: dict) -> dict:
         policy = spark.createDataFrame(
             rows, "host string, crawl_delay double, max_per_round int, "
                   "robots_disallow array<string>")
-        ccfg = CrawlConfig(n_salts=cfg["salts"], use_bloom=False,
-                           default_budget=cfg["budget"])
+        ccfg = CrawlConfig(n_salts=cfg["salts"], default_budget=cfg["budget"])
 
         # codegen/JIT warm-up: structurally identical, small
         warm_wh = tempfile.mkdtemp(prefix=f"warm{cpus}-", dir=workdir)

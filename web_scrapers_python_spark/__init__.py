@@ -7,7 +7,7 @@ with the query and data-processing capabilities of
 
 - DataFrame/SQL plans optimized by Catalyst + AQE; no RDDs.
 - Parsers as Arrow-vectorized pandas UDFs (no per-row Python).
-- A partitioned bloom-filter URL-seen set + exact anti-join dedup.
+- An append-only URL-seen event log + exact anti-join dedup.
 - Per-host politeness budgets as salted window top-k.
 - Snapshot-checkpointed state tables (Iceberg semantics; parquet
   snapshot emulation in this sandbox — see ``sources.catalog``).

@@ -1,3 +1,3 @@
-"""Engine operators: parsing UDFs, dedup (exact + bloom), politeness,
+"""Engine operators: parsing UDFs, exact seen dedup, politeness,
 link expansion, sequencing, text-corpus ops (near-dup, quality, langid),
 and similarity search."""

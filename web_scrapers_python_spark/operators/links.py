@@ -21,7 +21,7 @@ DISCOVER_LABELS_NOT = ("PARSE",)  # any other non-null label = CSS selector
 
 
 def host_bucket(host_col, n_buckets: int):
-    """Stable host bucketing for partitioning/bloom layout (anti-skew)."""
+    """Stable host bucketing for partitioning/shard layout (anti-skew)."""
     return F.pmod(F.xxhash64(host_col), F.lit(n_buckets)).cast("int")
 
 

@@ -8,7 +8,7 @@ Per round r (all declarative; Catalyst/AQE pick physical strategies):
       → fetch = inner join pages ⋈ scheduled (size-gated broadcast, J4)
       → phase split on label (E2): discover | parse
       → discover: link expansion (E1) → first-wins (J2)
-                  → bloom + exact anti-join vs seen (J1)
+                  → exact flag-mode anti-join vs seen (J1)
                   → deterministic seq assignment (O1)
       → parse: parser dispatch (F9/P3) → pandas-UDF parsers (P1)
                → AI analysis stage (P4/P5)
@@ -132,14 +132,10 @@ def read_frontier_full(catalog: SnapshotCatalog,
 
 @dataclass
 class CrawlConfig:
-    n_buckets: int = 64          # host buckets (partitioning + bloom layout)
+    n_buckets: int = 64          # host buckets (partitioning + shard layout)
     default_budget: int = W.DEFAULT_BUDGET
     order: str = "fifo"          # 'fifo' (reference parity) | 'priority' (W1)
     n_salts: int = 0             # >0 → salted two-stage politeness window
-    use_bloom: bool = False      # bloom pre-filter before exact anti-join
-    bloom_capacity: int = 100_000  # per-bucket sizing headroom for the
-                                   # incremental filter merge (10^10
-                                   # design point: ~2e7 per bucket)
     rediscover: bool = False     # False = reference two-phase routing
     max_retries: int = 3         # orchestrator.py:64
     max_depth: int | None = None
@@ -292,10 +288,7 @@ class CrawlEngine:
         frontier = self.catalog.read("frontier", bs["frontier"])  # pending
         seen = self.catalog.read("seen", bs["seen"])              # event log
         max_seq = self.catalog.snapshot_properties(
-            "frontier", bs["frontier"]).get("max_seq")
-        if max_seq is None:      # pre-split warehouse fallback
-            max_seq = frontier.agg(F.max("seq")).collect()[0][0] or 0
-            self.last_round_collects += 1
+            "frontier", bs["frontier"])["max_seq"]
         _mark("t_read_state")
 
         # refresh cohort: the rows fetched exactly ttl rounds ago,
@@ -452,7 +445,7 @@ class CrawlEngine:
         # discover-labeled rows (the common steady state of two-phase
         # routing) skips the whole expansion/dedup/sequencing plan —
         # several driver jobs of pure fixed cost on provably empty data.
-        children = deduped = filters = None
+        children = deduped = None
         if has_discover:
             children = L.expand_links(discover_rows, cfg.n_buckets,
                                       cfg.rediscover)
@@ -462,23 +455,6 @@ class CrawlEngine:
                 ),
                 "url_hash", "seq",
             )
-            # Seen-filter maintenance is INCREMENTAL: the per-bucket
-            # blooms come from the previous complete round's snapshot
-            # (same round tag as the seen log they summarize —
-            # consistent by construction) and only this round's inserts
-            # are OR-ed in (O(delta), not O(seen)). The full build runs
-            # only when the base round carries no filter snapshot;
-            # buckets that outgrow their bit array degrade to the exact
-            # path and are rebuilt below, right-sized, from the seen
-            # log.
-            if cfg.use_bloom:
-                if "seen_filters" in bs:
-                    filters = self.catalog.read("seen_filters",
-                                                bs["seen_filters"])
-                else:
-                    filters = D.build_bloom_filters(
-                        seen.select("host_bucket", "url_hash").distinct(),
-                        capacity=cfg.bloom_capacity)
             # cached: the sequencer's planning passes (count / bound
             # sample / bucket counts) and the final consumers all read
             # the flag-dedup output — one evaluation of the anti-join
@@ -487,7 +463,7 @@ class CrawlEngine:
             # bucket set fall out of the sequencer's planning job — the
             # separate children.agg barrier is gone (one fewer driver
             # round-trip per discovery round on real executors).
-            deduped = D.dedup_against_seen(children, seen, filters,
+            deduped = D.dedup_against_seen(children, seen,
                                            flag_col="_fresh") \
                        .drop("seq").cache()
             fresh, plan_stats = assign_global_seq(
@@ -501,8 +477,7 @@ class CrawlEngine:
             self.last_round_collects += 2 if plan_stats["n"] else 1
             n_fresh = plan_stats["n"]
             n_children = plan_stats["n_all"]
-            child_buckets = {int(b) for b in plan_stats["set"]}
-            touched_buckets |= child_buckets
+            touched_buckets |= {int(b) for b in plan_stats["set"]}
             # cached: consumed 2x (pending union + seen inserts); its
             # row count fell out of the sequencer's planning pass
             fresh_frontier = fresh.select(
@@ -514,7 +489,7 @@ class CrawlEngine:
         else:
             fresh_frontier = self.spark.createDataFrame([], frontier.schema)
             n_fresh = 0
-            n_children, child_buckets = 0, set()
+            n_children = 0
 
         # frontier state transitions, computed over the TOUCHED buckets
         # only: every row that can change state (scheduled, blocked,
@@ -725,55 +700,6 @@ class CrawlEngine:
                     "seen", compacted, group, "host_bucket",
                     {"round": r, "compacted_group": g},
                     base_snapshot_id=snaps["seen"])
-            if cfg.use_bloom and not has_discover:
-                # no inserts this round: the base filter snapshot is
-                # still exact for the new seen log — re-commit its id
-                if "seen_filters" in bs:
-                    snaps["seen_filters"] = bs["seen_filters"]
-            elif cfg.use_bloom:
-                # incremental filter maintenance is shard-scoped too:
-                # only buckets receiving inserts re-merge (cogrouped
-                # applyInPandas over O(delta) keys) and only their
-                # shards are rewritten. Degraded buckets (n_bits=0
-                # sentinel) are detected from the written delta's
-                # narrow health columns via a driver-side pyarrow read
-                # — no extra Spark job barrier.
-                # with a prior filter snapshot, only the touched
-                # buckets' filters enter the merge and only their
-                # shards are rewritten; a fresh full build (no prior
-                # snapshot) writes every bucket on a fresh lineage.
-                if "seen_filters" in bs:
-                    merge_in = filters.where(
-                        F.col("host_bucket").isin(sorted(child_buckets)))
-                else:
-                    merge_in = filters
-                new_filters = D.merge_bloom_filters(
-                    merge_in,
-                    insert_events.select("host_bucket", "url_hash"),
-                    capacity=cfg.bloom_capacity)
-                fid = self.catalog.overwrite_shards(
-                    "seen_filters", new_filters, sorted(child_buckets),
-                    "host_bucket",
-                    {"round": r, "for_seen_snapshot": snaps["seen"]},
-                    base_snapshot_id=bs.get("seen_filters", -1))
-                health = self.catalog.snapshot_delta_columns_local(
-                    "seen_filters", fid,
-                    ["host_bucket", "n_bits", "n_items"])
-                degraded = [h for h in health if int(h["n_bits"]) == 0]
-                if degraded:
-                    ids = sorted(int(h["host_bucket"]) for h in degraded)
-                    cap = max(cfg.bloom_capacity,
-                              2 * max(int(h["n_items"]) for h in degraded))
-                    rebuilt = D.build_bloom_filters(
-                        self.catalog.read_shards("seen", ids, snaps["seen"])
-                        .select("host_bucket", "url_hash").distinct(),
-                        capacity=cap)
-                    fid = self.catalog.overwrite_shards(
-                        "seen_filters", rebuilt, ids, "host_bucket",
-                        {"round": r, "for_seen_snapshot": snaps["seen"],
-                         "rebuilt_buckets": ids},
-                        base_snapshot_id=fid)
-                snaps["seen_filters"] = fid
 
         def w_history_then_seen():
             # seen's duplicate events derive from the history delta, so

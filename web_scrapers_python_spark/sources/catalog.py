@@ -167,8 +167,12 @@ class SnapshotCatalog:
         snap_id = (snaps[-1]["id"] + 1) if snaps else 0
         data_dir = os.path.join(tdir, f"snap-{snap_id}")
         tmp_dir = data_dir + ".tmp"
-        if os.path.exists(tmp_dir):
-            shutil.rmtree(tmp_dir)
+        # the snapshot log is the authority: a snap-<n> it does not list
+        # is the orphan of a crash between the rename below and the
+        # commit, and would make the rename fail forever
+        for stale in (tmp_dir, data_dir):
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
         writer = df
         if shard_col is not None:
             # cluster each shard's rows into one task before partitionBy
@@ -346,7 +350,7 @@ class SnapshotCatalog:
                                      columns: list[str]) -> list[dict]:
         """Driver-side (pyarrow) read of selected NARROW columns from
         the rows a snapshot wrote — no Spark job. Only for
-        metadata-sized reads (e.g. per-bucket bloom health columns);
+        metadata-sized reads (e.g. url + state of a round's archived rows);
         payload columns would pull data through the driver."""
         import pyarrow.parquet as pq
         out: list[dict] = []

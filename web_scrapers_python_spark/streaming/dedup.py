@@ -4,7 +4,7 @@ Structured-Streaming operator (`applyInPandasWithState`).
 A live deployment of the crawl engine consumes discovered-URL events
 as a stream; the seen-set check must then be continuous rather than
 per-round. State is keyed by ``host_bucket`` (the same partitioning as
-the batch engine's bloom layout, SURVEY §4.2.1) and holds the set of
+the batch engine's seen shards, SURVEY §4.2.1) and holds the set of
 url_hashes seen so far in that bucket; each micro-batch emits ONLY
 first occurrences, in the exact first-enqueue-wins semantics of the
 batch `first_wins` + anti-join composite (J1/J2).
@@ -15,24 +15,24 @@ Two state layouts, same operator shape and same output contract:
   small/medium tool: per-batch cost is O(batch) probes but the state
   rewrite is O(|seen-in-bucket|) per updated bucket, so it does NOT
   hold at the 10^10 design point.
-- ``stream_first_seen_bloom`` — the 10^10 path (the same partitioned
-  bloom layout as the batch engine, operators/dedup.py): state per
-  bucket is a fixed-size serialized bloom filter plus a BOUNDED
-  exact-suffix list of the most recent inserts. Per-batch cost is
-  O(batch * k_hashes) probes + an O(bloom_bytes + suffix_len) state
-  rewrite — independent of |seen|. Semantics: a bloom has NO false
-  negatives, so every truly-seen url_hash is dropped (first-wins is
-  never violated by re-emission); a bloom false positive drops a
-  fresh URL, the SAFE direction for a crawler (a skipped URL, never a
-  re-crawl loop), at the configured fp rate. The exact suffix makes
-  the bursty common case exact regardless of bloom content: a dup
-  arriving within ``suffix_len`` inserts of its first occurrence is
-  confirmed by exact membership, not probabilistically. The batch
-  twin resolves bloom suspects with an exact anti-join against the
-  durable seen table (operators/dedup.py::dedup_against_seen); a
-  continuous stream has no per-batch side-join, so the residual fp
-  rate IS the accuracy contract — size ``capacity``/``fp_rate`` for
-  the corpus (10^7 keys/bucket at 1% fp ~ 12 MB/bucket, SURVEY §7).
+- ``stream_first_seen_bloom`` — the 10^10 path (a partitioned bloom
+  layout, one filter per host_bucket): state per bucket is a
+  fixed-size serialized bloom filter plus a BOUNDED exact-suffix list
+  of the most recent inserts. Per-batch cost is O(batch * k_hashes)
+  probes + an O(bloom_bytes + suffix_len) state rewrite — independent
+  of |seen|. Semantics: a bloom has NO false negatives, so every
+  truly-seen url_hash is dropped (first-wins is never violated by
+  re-emission); a bloom false positive drops a fresh URL, the SAFE
+  direction for a crawler (a skipped URL, never a re-crawl loop), at
+  the configured fp rate. The exact suffix makes the bursty common
+  case exact regardless of bloom content: a dup arriving within
+  ``suffix_len`` inserts of its first occurrence is confirmed by exact
+  membership, not probabilistically. The batch engine checks every
+  candidate exactly against the durable seen table
+  (operators/dedup.py::dedup_against_seen); a continuous stream has no
+  per-batch side-join, so the residual fp rate IS the accuracy
+  contract — size ``capacity``/``fp_rate`` for the corpus (10^7
+  keys/bucket at 1% fp ~ 12 MB/bucket, SURVEY §7).
 
 Shared scale notes:
 - `applyInPandasWithState` receives Arrow batches per key — the
@@ -44,6 +44,8 @@ Shared scale notes:
 
 from __future__ import annotations
 
+import hashlib
+import math
 from typing import Any, Iterator, Tuple
 
 import numpy as np
@@ -51,13 +53,26 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.dedup import _bloom_params, _positions
-
 EVENT_SCHEMA = "url_hash string, url string, host_bucket int, seq long"
 OUT_SCHEMA = "url_hash string, url string, host_bucket int, seq long"
 STATE_SCHEMA = "seen array<string>"
 BLOOM_STATE_SCHEMA = ("filter binary, n_bits long, n_hashes int, "
                       "n_items long, suffix array<string>")
+
+
+def _bloom_params(n_items: int, fp_rate: float) -> tuple[int, int]:
+    n = max(n_items, 1)
+    m = max(64, int(-n * math.log(fp_rate) / (math.log(2) ** 2)))
+    m = (m + 7) // 8 * 8
+    k = max(1, round(m / n * math.log(2)))
+    return m, min(k, 16)
+
+
+def _positions(key: str, m: int, k: int) -> np.ndarray:
+    d = hashlib.sha256(key.encode()).digest()
+    h1 = int.from_bytes(d[:8], "big")
+    h2 = int.from_bytes(d[8:16], "big") | 1
+    return np.array([(h1 + i * h2) % m for i in range(k)], dtype=np.int64)
 
 
 def _first_seen(key: Tuple[Any, ...],
@@ -147,9 +162,8 @@ def stream_first_seen_bloom(events: DataFrame, capacity: int = 100_000,
     the 10^10 layout promised by this module's docstring: per-batch
     cost bounded by batch size (probes) + a constant-size state
     rewrite, never O(|seen|). ``capacity``/``fp_rate`` size the filter
-    per bucket exactly like the batch layer's ``build_bloom_filters``;
-    the SAME hash family (operators/dedup.py::_positions), so batch
-    and stream agree on what a filter means."""
+    per bucket (``_bloom_params``); ``_positions`` is the double-hashed
+    sha256 probe family."""
     return (
         events.groupBy("host_bucket")
         .applyInPandasWithState(
